@@ -18,6 +18,8 @@ Missing keys make it a LEFT OUTER join with ``coalesce(name,
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -70,54 +72,63 @@ def synthetic_regions(spark: SparkSession) -> DataFrame:
     return root.unionByName(mids).unionByName(leaves.select(*REGION_SCHEMA.names))
 
 
+def _coords(*coords) -> tuple[int, ...]:
+    """Voxel coordinates as Python ints, safe to inline into SQL text.
+
+    ``operator.index`` accepts ints and NumPy integers and raises
+    ``TypeError`` for floats, strings and everything else, so no other
+    value ever reaches the expression strings below."""
+    return tuple(operator.index(c) for c in coords)
+
+
 def point_lookup(voxels: DataFrame, z: int, y: int, x: int) -> DataFrame:
     """Q1 — ``arr[z,y,x] -> label`` (load_test.py:9).
 
-    A conjunctive equality filter; on a chunk-key-partitioned store the
-    scan partition-prunes via parquet min/max stats, giving the
-    reference's interactive latency at any scale.
+    A conjunctive equality filter; on a parquet-backed voxel table it
+    reaches the scan as PushedFilters, so row-group min/max stats skip
+    I/O.  The predicate is SQL text: one py4j round trip for all of it.
     """
-    return voxels.filter((F.col("z") == z) & (F.col("y") == y) & (F.col("x") == x))
+    z, y, x = _coords(z, y, x)
+    return voxels.filter(f"z = {z} AND y = {y} AND x = {x}")
 
 
 def point_lookup_chunks(chunks: DataFrame, z: int, y: int, x: int) -> DataFrame:
     """Q1 directly on the chunk-packed store — ZERO payload decode,
     zero Python: the containing chunk is found by range predicates on
-    the metadata columns (pushed to the parquet scan, so partition
-    dirs + row groups prune before any payload byte is read), and the
-    single voxel is extracted from the raw C-order payload with SQL
-    byte arithmetic (``substring``+``hex``+``conv`` on the four
-    little-endian bytes at ``((z−z0)·dy·dx + (y−y0)·dx + (x−x0))·4``).
+    the metadata columns, and the single voxel is extracted from the
+    raw C-order payload with SQL byte arithmetic.
 
-    At 100 TB this reads ONE row group's worth of one payload column —
-    the chunk-path analog of the reference's memmap single-voxel read
-    (load_test.py:9).  Requires ``codec='raw'`` rows (compressed chunks
-    must decode; use the COO path for those).
+    Pruning: ``z0 <= z``, ``y0 <= y`` and ``x0 <= x`` reach the parquet
+    scan as PushedFilters, so row groups whose ``z0/y0/x0`` min/max
+    stats exclude the voxel are skipped.  There is no ``cz`` predicate,
+    so every ``cz=`` partition directory and file is still opened; the
+    upper bounds (``z < z0 + dz``) are evaluated after the scan.
+
+    The label is the little-endian uint32 at byte offset
+    ``((z−z0)·dy·dx + (y−y0)·dx + (x−x0))·4``: ``hex`` of those four
+    bytes, byte-swapped by one ``regexp_replace``, then one ``conv``
+    base 16 → 10.  (``reverse`` is NOT a byte swap: on binary it casts
+    to a UTF-8 string first and mangles bytes ≥ 0x80.)
+
+    The plan is built from SQL text (``filter(str)``, ``selectExpr``)
+    because PySpark wraps every Column/functions call in several py4j
+    round trips; text keeps building one lookup to a few dozen.
+    Requires ``codec='raw'`` rows (compressed chunks must decode; use
+    the COO path for those).
     """
-    hit = chunks.filter(
-        (F.col("z0") <= z) & (F.lit(z) < F.col("z0") + F.col("dz"))
-        & (F.col("y0") <= y) & (F.lit(y) < F.col("y0") + F.col("dy"))
-        & (F.col("x0") <= x) & (F.lit(x) < F.col("x0") + F.col("dx"))
-        & (F.col("codec") == "raw")
-    )
-    off = (
-        (F.lit(z) - F.col("z0")) * F.col("dy") * F.col("dx")
-        + (F.lit(y) - F.col("y0")) * F.col("dx")
-        + (F.lit(x) - F.col("x0"))
-    ) * 4 + 1  # substring is 1-based
-    sel = hit.withColumn("__off", off.cast("int"))
-    label = sum(
-        F.conv(
-            F.hex(F.expr(f"substring(payload, __off + {i}, 1)")), 16, 10
-        ).cast("long")
-        * (256**i)
-        for i in range(4)
-    )
-    return sel.select(
-        F.lit(z).cast("long").alias("z"),
-        F.lit(y).cast("long").alias("y"),
-        F.lit(x).cast("long").alias("x"),
-        label.alias("label"),
+    z, y, x = _coords(z, y, x)
+    off = f"CAST((({z} - z0) * dy * dx + ({y} - y0) * dx + ({x} - x0)) * 4 + 1 AS INT)"
+    return chunks.filter(
+        f"z0 <= {z} AND {z} < z0 + dz"
+        f" AND y0 <= {y} AND {y} < y0 + dy"
+        f" AND x0 <= {x} AND {x} < x0 + dx"
+        " AND codec = 'raw'"
+    ).selectExpr(
+        f"{z}L AS z",
+        f"{y}L AS y",
+        f"{x}L AS x",
+        "CAST(conv(regexp_replace(hex(substring(payload, "
+        f"{off}, 4)), '(..)(..)(..)(..)', '$4$3$2$1'), 16, 10) AS BIGINT) AS label",
     )
 
 
@@ -132,18 +143,19 @@ def decode_labels(voxels: DataFrame, regions: DataFrame) -> DataFrame:
     ``lookup_test2.py:21-29``: voxel value is the join key; missing keys
     yield "Unknown region ID" (lookup_by_id.py:32-33) → LEFT OUTER +
     coalesce.  Broadcast hash join: the dim is 2,692 rows in the
-    reference; the fact side never shuffles.
+    reference; the fact side never shuffles.  Built from SQL text like
+    ``point_lookup_chunks``: the dim's ``region`` is renamed to
+    ``label`` so the join is a USING join on one column name.
     """
-    return voxels.join(
-        F.broadcast(regions), voxels["label"] == regions["region"], "left"
-    ).select(
+    dim = regions.selectExpr("region AS label", "region_name", "region_abbr", "level")
+    return voxels.join(dim.hint("broadcast"), "label", "left").selectExpr(
         "z",
         "y",
         "x",
         "label",
-        F.coalesce(F.col("region_name"), F.lit("Unknown")).alias("region_name"),
-        F.coalesce(F.col("region_abbr"), F.lit("?")).alias("region_abbr"),
-        F.col("level"),
+        "coalesce(region_name, 'Unknown') AS region_name",
+        "coalesce(region_abbr, '?') AS region_abbr",
+        "level",
     )
 
 

@@ -17,8 +17,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "atlas_upscaling_dask_spark",
@@ -37,6 +35,9 @@ def get_spark(
       semantics (and DuckDB-oracle comparability).
     * Arrow enabled — every pandas/Python boundary is batched.
     * Parquet zstd — the reference's Blosc-zstd chunk codec analog.
+
+    ``SPARK_GRAFT_CPUS`` (default 32) sets both the local master's core
+    count and the default shuffle partitions; it is read on every call.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -45,7 +46,7 @@ def get_spark(
         .master(master)
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or int(cpus)),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -37,10 +37,11 @@ def write_volume(
 ) -> None:
     """K1+K2+K3+K5 — overwrite-write the chunk table + JSON sidecar.
 
-    Partitioned by ``cz`` (the coarse chunk key): a z-slab point query
-    prunes whole directories, and parquet min/max stats on cy/cx prune
-    row groups within them — the Spark analog of Zarr's chunk grid
-    addressing.
+    Partitioned by ``cz`` (the coarse chunk key): only a query with a
+    ``cz`` predicate prunes whole directories.  A point lookup
+    (``point_lookup_chunks``) has none, so it opens every partition and
+    file; what prunes it is parquet row-group min/max stats on the
+    ``z0/y0/x0`` range predicates pushed to the scan.
     """
     if compressor not in COMPRESSORS:
         raise ValueError(f"compressor must be one of {sorted(COMPRESSORS)}")

@@ -221,6 +221,121 @@ def test_point_lookup_chunks_skips_compressed(spark):
     assert point_lookup_chunks(compressed, 1, 1, 1).isEmpty()
 
 
+# raw uint32 labels whose little-endian bytes exercise every byte lane:
+# 0xFFFFFFF0 is the `reverse()` trap (reverse(binary) goes through a
+# UTF-8 string and returns 4043309055 instead of 4294967280)
+_EDGE_LABELS = {
+    (0, 0, 0): 0xFFFFFFF0,  # first voxel of the first chunk
+    (3, 3, 7): 2**31,  # last voxel of the first chunk
+    (4, 4, 8): 65535,  # first voxel of chunk (1,1,1)
+    (7, 7, 15): 256,  # last voxel of the volume
+    (1, 2, 5): 255,  # interiors
+    (5, 1, 12): 0,
+    (2, 6, 3): 0xFFFFFFF0,
+    (6, 5, 9): 2**31,
+}
+
+
+@pytest.fixture(scope="module")
+def edge_store(spark, tmp_path_factory):
+    """An 8×8×16 uint32 volume in 4×4×8 raw chunks, written with
+    ``write_volume`` and read back; random labels everywhere except the
+    ``_EDGE_LABELS`` voxels.  Returns (stored frame, NumPy volume)."""
+    import numpy as np
+
+    from atlas_upscaling_dask_spark.sinks.writer import write_volume
+    from atlas_upscaling_dask_spark.volume import CHUNK_SCHEMA, VolumeMeta
+
+    vol = np.random.default_rng(7).integers(0, 2**32, (8, 8, 16), dtype=np.uint32)
+    for zyx, label in _EDGE_LABELS.items():
+        vol[zyx] = label
+    rows = []
+    for cz, z0 in enumerate(range(0, 8, 4)):
+        for cy, y0 in enumerate(range(0, 8, 4)):
+            for cx, x0 in enumerate(range(0, 16, 8)):
+                block = vol[z0 : z0 + 4, y0 : y0 + 4, x0 : x0 + 8]
+                rows.append(("vol", cz, cy, cx, z0, y0, x0, 4, 4, 8, "raw",
+                             block.astype("<u4").tobytes()))
+    meta = VolumeMeta(8, 8, 16)
+    path = str(tmp_path_factory.mktemp("edge") / "vol")
+    write_volume(spark.createDataFrame(rows, CHUNK_SCHEMA), path, meta,
+                 compressor="none")
+    return spark.read.parquet(path), vol
+
+
+def test_point_lookup_chunks_decodes_uint32_edge_labels(spark, edge_store):
+    from atlas_upscaling_dask_spark.operators.relational import (
+        REGION_SCHEMA,
+        point_lookup_chunks,
+    )
+    from atlas_upscaling_dask_spark.plans.estimate import explain
+
+    stored, vol = edge_store
+    for (z, y, x), label in _EDGE_LABELS.items():
+        rows = point_lookup_chunks(stored, z, y, x).collect()
+        assert [tuple(r) for r in rows] == [(z, y, x, int(vol[z, y, x]))]
+        assert rows[0]["label"] == label
+    # the decoded label joins the dim as an unsigned 64-bit key
+    regions = spark.createDataFrame(
+        [(2**31, "A", "big", 1, 0), (0xFFFFFFF0, "B", "max", 2, 0)], REGION_SCHEMA
+    )
+    q = decode_labels(point_lookup_chunks(stored, 6, 5, 9), regions)
+    assert [tuple(r) for r in q.collect()] == [(6, 5, 9, 2**31, "big", "A", 1)]
+    assert q.schema.simpleString() == (
+        "struct<z:bigint,y:bigint,x:bigint,label:bigint,region_name:string,"
+        "region_abbr:string,level:int>"
+    )
+    q = decode_labels(point_lookup_chunks(stored, 1, 2, 5), regions)
+    assert [tuple(r) for r in q.collect()] == [(1, 2, 5, 255, "Unknown", "?", None)]
+    plan = explain(q)
+    assert "LessThanOrEqual(z0,1)" in plan
+    assert "BroadcastHashJoin" in plan and "LeftOuter" in plan
+
+
+def test_lookup_coordinate_types(spark, edge_store):
+    import numpy as np
+
+    from atlas_upscaling_dask_spark.operators.relational import point_lookup_chunks
+
+    stored, vol = edge_store
+    z, y, x = np.int64(3), np.int32(3), np.uint16(7)
+    rows = point_lookup_chunks(stored, z, y, x).collect()
+    assert [tuple(r) for r in rows] == [(3, 3, 7, 2**31)]
+    assert point_lookup(spark.range(1).selectExpr("id AS z", "id AS y", "id AS x"),
+                        np.int8(0), 0, np.uint64(0)).count() == 1
+    # a frame that fails on any method call: the TypeError must come
+    # from the coordinate check, before any SQL text reaches Spark
+    no_frame = object()
+    for bad in (4.0, np.float32(4), "4", "4 OR 1=1", None):
+        with pytest.raises(TypeError):
+            point_lookup_chunks(no_frame, 1, bad, 1)
+        with pytest.raises(TypeError):
+            point_lookup(no_frame, bad, 1, 1)
+
+
+def test_decoded_lookup_py4j_budget(spark, edge_store, monkeypatch):
+    # PySpark wraps every Column/functions call in several py4j round
+    # trips; the SQL-text lookup must stay a few dozen per query
+    from py4j.clientserver import ClientServerConnection
+
+    from atlas_upscaling_dask_spark.operators.relational import point_lookup_chunks
+
+    stored, _ = edge_store
+    regions = synthetic_regions(spark)
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    q = decode_labels(point_lookup_chunks(stored, 4, 4, 8), regions)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 80, f"{len(calls)} py4j round trips to build one lookup"
+    assert q.first()["label"] == 65535
+
+
 def test_profile_columns_stats_and_rejection(spark):
     import pytest
     from pyspark.sql import functions as F

@@ -363,6 +363,14 @@ def audited_queries():
             lambda spark, sf_dir: _bulk(spark, "point"),
             {"pushdown": True, "no_shuffle": True, "no_python_udf": True, "codegen": True},
         ),
+        # the composed interactive query (lookup_test2.py): binary point
+        # lookup, then the broadcast LEFT join to the region dim — still
+        # pushed down, shuffle-free and JVM-compiled end to end
+        "point_lookup_decoded": (
+            lambda spark, sf_dir: _bulk(spark, "point_decoded"),
+            {"pushdown": True, "broadcast": True, "max_shuffles": 0,
+             "no_python_udf": True, "codegen": True},
+        ),
         # aligned rechunk, fine direction: pure per-row split — narrow
         "split_chunks_bulk": (
             lambda spark, sf_dir: _bulk(spark, "split"),
@@ -1245,12 +1253,15 @@ def _bulk(spark, op: str):
     from atlas_upscaling_dask_spark.operators.upscale import upscale_chunks
 
     chunks = _chunk_table(spark)
-    if op == "point":
+    if op in ("point", "point_decoded"):
         from atlas_upscaling_dask_spark.operators.relational import (
+            decode_labels,
             point_lookup_chunks,
+            synthetic_regions,
         )
 
-        return point_lookup_chunks(chunks, 4, 4, 4)
+        hit = point_lookup_chunks(chunks, 4, 4, 4)
+        return hit if op == "point" else decode_labels(hit, synthetic_regions(spark))
     if op == "split":
         from atlas_upscaling_dask_spark.volume import split_chunks
 
