@@ -46,6 +46,11 @@ _LCG_A = 1_103_515_245
 _LCG_C = 1_013_904_223
 
 
+def _ident(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _hash_params(i: int) -> tuple[int, int]:
     """Deterministic (a, b) for hash function i — identical constants are
     hardcoded in the SQL oracle (suite.py)."""
@@ -53,8 +58,8 @@ def _hash_params(i: int) -> tuple[int, int]:
 
 
 def spread_small_input(df: DataFrame, key_col: str) -> DataFrame:
-    """Repartition by ``key_col`` iff the scan has fewer partitions than
-    the session's shuffle parallelism.
+    """Repartition by ``key_col`` iff ``df`` would reach its consumer in
+    fewer partitions than the session's shuffle parallelism.
 
     Byte-based input splitting undersizes parallelism for operators
     whose work explodes per row (shingling multiplies a document ~100×):
@@ -62,14 +67,60 @@ def spread_small_input(df: DataFrame, key_col: str) -> DataFrame:
     pipeline runs on one core.  Hash-repartitioning on the downstream
     GROUP KEY fixes that without adding a net shuffle — the partitioning
     survives the narrow ops, so the later groupBy(key) skips its
-    exchange.  At real scale the scan already has ≥ target partitions
+    exchange.  At real scale the input already has ≥ target partitions
     and this is a no-op.
+
+    The decision is read from the plan and never runs a Spark job:
+
+    * A plan without an exchange is not wrapped by AQE, so
+      ``df.rdd.getNumPartitions()`` only lists its scan splits.
+    * A plan with an exchange is wrapped, and there ``.rdd`` would run
+      every upstream shuffle-map stage (which the consumer then runs
+      again).  Its output has ``spark.sql.shuffle.partitions``
+      partitions until AQE coalesces them, so it is repartitioned only
+      if the optimizer's size estimate is small enough for AQE to merge
+      it below that count (``_coalesces_below``).
     """
     spark = df.sparkSession
     target = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target, F.col(key_col))
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().nodeName() != "AdaptiveSparkPlan":
+        small = df.rdd.getNumPartitions() < target
+    else:
+        small = _coalesces_below(spark, qe.optimizedPlan().stats().sizeInBytes(), target)
+    return df.repartition(target, key_col) if small else df
+
+
+def _coalesces_below(spark, size: int, target: int) -> bool:
+    """Would AQE merge a ``size``-byte shuffle output into fewer than
+    ``target`` partitions?
+
+    CoalesceShufflePartitions fills partitions up to max(min(size / n,
+    advisoryPartitionSizeInBytes), minPartitionSize) bytes, where n is
+    the minimum partition number (default: the default parallelism)
+    with ``parallelismFirst`` on and 1 with it off.
+    """
+    conf = spark.conf
+    prefix = "spark.sql.adaptive.coalescePartitions."
+    if conf.get(prefix + "enabled").lower() != "true":
+        return False
+    n = 1
+    if conf.get(prefix + "parallelismFirst").lower() == "true":
+        n = conf.get(prefix + "minPartitionNum", None)
+        n = int(n or spark.sparkContext.defaultParallelism)
+    advisory = _conf_bytes(conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    floor = _conf_bytes(conf.get(prefix + "minPartitionSize"))
+    per_partition = max(min(size / n, advisory), floor)
+    return size < target * per_partition
+
+
+def _conf_bytes(value: str) -> int:
+    """A Spark byte-size string (an integer with an optional b/k/kb/m/mb/…
+    unit; bytes without one) as bytes."""
+    value = value.strip().lower()
+    digits = value.rstrip("bkmgtp")
+    unit = value[len(digits):] or "b"
+    return int(digits) * 1024 ** "bkmgtp".index(unit[0])
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -82,18 +133,22 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     lone 64-bit key silently merges distinct documents at corpus scale
     (at 1e12 docs the birthday bound expects ~thousands of collisions;
     at 128 bits the expectation is ~1e-15).
+
+    Built from SQL text, like ``minhash_lsh_pairs``: PySpark wraps every
+    Column/functions call in several py4j round trips.
     """
+    text, doc_id = _ident(text_col), _ident(id_col)
     return (
         docs.groupBy(
-            F.xxhash64(F.col(text_col)).alias("__h1"),
-            F.xxhash64(F.lit("fp2"), F.col(text_col)).alias("__h2"),
+            F.expr(f"xxhash64({text}) AS __h1"),
+            F.expr(f"xxhash64('fp2', {text}) AS __h2"),
         )
         .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count("*").alias("n_copies"),
-            F.first(text_col).alias(text_col),
+            F.expr(f"min({doc_id}) AS keep_id"),
+            F.expr("count(*) AS n_copies"),
+            F.expr(f"first({text}) AS {text}"),
         )
-        .select("keep_id", "n_copies", text_col)
+        .selectExpr("keep_id", "n_copies", text)
     )
 
 
@@ -288,9 +343,11 @@ def minhash_signatures_wide(
         # gets pushdown-substituted with the whole transform expression
         # and defeats codegen subexpression reuse (measured 5× slower
         # at sf0.1 — 1.9 s vs 0.39 s for the full 16-hash signature).
-        toks = docs.filter(
-            F.size(F.split(F.col(text_col), " ")) >= shingle_n
-        ).select(F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("w"))
+        # SQL text throughout: Column calls cost py4j round trips each.
+        text = _ident(text_col)
+        toks = docs.filter(f"size(split({text}, ' ')) >= {shingle_n}").selectExpr(
+            f"{_ident(id_col)} AS doc_id", f"split({text}, ' ') AS w"
+        )
         # r12: zip n shifted bulk slices instead of a per-element
         # interpreted slice() inside the lambda — same trick as
         # word_shingles, proven signature-identical; 1.42× at sf0.1
@@ -299,20 +356,16 @@ def minhash_signatures_wide(
             for k in range(shingle_n)
         )
         joined = ", ".join(f"s.`{k}`" for k in range(shingle_n))
-        h = toks.select(
+        h = toks.selectExpr(
             "doc_id",
-            F.expr(
-                f"transform(arrays_zip({zipped}), "
-                f"s -> pmod(xxhash64(concat_ws('_', {joined})), {MINHASH_P}L))"
-            ).alias("h"),
+            f"transform(arrays_zip({zipped}), "
+            f"s -> pmod(xxhash64(concat_ws('_', {joined})), {MINHASH_P}L)) AS h",
         )
-        sig = F.array(
-            *[
-                F.expr(f"array_min(transform(h, t -> pmod({a}L * t + {b}L, {MINHASH_P}L)))")
-                for a, b in (_hash_params(i) for i in range(num_hashes))
-            ]
+        sig = ", ".join(
+            f"array_min(transform(h, t -> pmod({a}L * t + {b}L, {MINHASH_P}L)))"
+            for a, b in (_hash_params(i) for i in range(num_hashes))
         )
-        return h.select("doc_id", sig.alias("sig_arr"))
+        return h.selectExpr("doc_id", f"array({sig}) AS sig_arr")
     grams = word_shingles(docs, shingle_n, text_col, id_col, distinct=False)
     dict_df = _shingle_dictionary(grams)
     toks = grams.join(F.broadcast(dict_df), "gram").select("doc_id", "tid")
@@ -374,17 +427,8 @@ def minhash_lsh_pairs(
         docs, num_hashes, shingle_n, text_col, id_col, use_dictionary
     )
     banded = _band_rows(wide, num_hashes, bands)
-    l = banded.select(F.col("doc_id").alias("d1"), F.col("sig_arr").alias("arr1"), "band", "bkey")
-    rr = banded.select(F.col("doc_id").alias("d2"), F.col("sig_arr").alias("arr2"), "band", "bkey")
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("arr1"), F.col("arr2"), lambda a, b: a == b),
-                lambda eq: eq,
-            )
-        )
-        / num_hashes
-    )
+    l = banded.selectExpr("doc_id AS d1", "sig_arr AS arr1", "band", "bkey")
+    rr = banded.selectExpr("doc_id AS d2", "sig_arr AS arr2", "band", "bkey")
     # Score INSIDE the bucket join, then deduplicate (d1,d2): est_sim is
     # a pure function of the two signatures, so every band that yields
     # the same pair computes the same score and dropDuplicates is exact.
@@ -393,12 +437,25 @@ def minhash_lsh_pairs(
     # gone before the exchange (measured 1.45 s → 1.21 s at sf0.1).
     return (
         l.join(rr, ["band", "bkey"])
-        .filter(F.col("d1") < F.col("d2"))
-        .withColumn("est_sim", est)
-        .filter(F.col("est_sim") >= min_est_sim)
-        .select("d1", "d2", "est_sim")
+        .filter("d1 < d2")
+        .selectExpr("d1", "d2", _est_sim(num_hashes))
+        .filter(f"est_sim >= {_sql_double(min_est_sim)}")
         .dropDuplicates(["d1", "d2"])
     )
+
+
+def _est_sim(num_hashes: int) -> str:
+    """SQL for the share of equal components of signatures arr1, arr2."""
+    return (
+        "size(filter(zip_with(arr1, arr2, (a, b) -> a = b), eq -> eq))"
+        f" / {num_hashes} AS est_sim"
+    )
+
+
+def _sql_double(x: float) -> str:
+    """``x`` as a SQL DOUBLE equal to the Python float (a bare ``0.7``
+    would parse as DECIMAL)."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
 
 
 def simhash(
@@ -642,29 +699,14 @@ def _band_rows(wide: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """Explode a wide signature frame into (doc_id, sig_arr, band, bkey)
     rows — one per band, the bucket key = the band's sub-signature."""
     r = num_hashes // bands
-    return wide.select(
-        "doc_id",
-        "sig_arr",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.slice("sig_arr", b * r + 1, r),
-                                lambda v: v.cast("string"),
-                            ),
-                        ).alias("bkey"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        "doc_id", "sig_arr", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
+    structs = ", ".join(
+        f"named_struct('band', {b}, 'bkey', concat_ws(',', "
+        f"transform(slice(sig_arr, {b * r + 1}, {r}), v -> CAST(v AS STRING))))"
+        for b in range(bands)
     )
+    return wide.selectExpr(
+        "doc_id", "sig_arr", f"explode(array({structs})) AS bk"
+    ).selectExpr("doc_id", "sig_arr", "bk.band AS band", "bk.bkey AS bkey")
 
 
 def _banded_signatures(
@@ -758,27 +800,13 @@ def lsh_index_pairs(
     the signature computation is a parquet scan (parity-tested)."""
     p = _lsh_index_params(spark, path)
     banded = _read_lsh_index(spark, path, p)
-    lhs = banded.select(
-        F.col("doc_id").alias("d1"), F.col("sig_arr").alias("arr1"), "band", "bkey"
-    )
-    rhs = banded.select(
-        F.col("doc_id").alias("d2"), F.col("sig_arr").alias("arr2"), "band", "bkey"
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("arr1"), F.col("arr2"), lambda a, b: a == b),
-                lambda eq: eq,
-            )
-        )
-        / p["num_hashes"]
-    )
+    lhs = banded.selectExpr("doc_id AS d1", "sig_arr AS arr1", "band", "bkey")
+    rhs = banded.selectExpr("doc_id AS d2", "sig_arr AS arr2", "band", "bkey")
     return (
         lhs.join(rhs, ["band", "bkey"])
-        .filter(F.col("d1") < F.col("d2"))
-        .withColumn("est_sim", est)
-        .filter(F.col("est_sim") >= min_est_sim)
-        .select("d1", "d2", "est_sim")
+        .filter("d1 < d2")
+        .selectExpr("d1", "d2", _est_sim(p["num_hashes"]))
+        .filter(f"est_sim >= {_sql_double(min_est_sim)}")
         .dropDuplicates(["d1", "d2"])
     )
 
@@ -798,37 +826,19 @@ def lsh_index_query(
     p = _lsh_index_params(spark, path)
     probe = _banded_signatures(
         probe_docs, p["num_hashes"], p["bands"], p["shingle_n"], text_col, id_col
-    ).select(
-        F.col("doc_id").alias("probe_id"),
-        F.col("sig_arr").alias("arr1"),
-        "band",
-        "bkey",
-    )
+    ).selectExpr("doc_id AS probe_id", "sig_arr AS arr1", "band", "bkey")
     corpus = _without_tombstoned(
         spark,
         path,
-        _read_lsh_index(spark, path, p).select(
-            F.col("doc_id").alias("corpus_id"),
-            F.col("sig_arr").alias("arr2"),
-            "band",
-            "bkey",
+        _read_lsh_index(spark, path, p).selectExpr(
+            "doc_id AS corpus_id", "sig_arr AS arr2", "band", "bkey"
         ),
         "corpus_id",
     )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("arr1"), F.col("arr2"), lambda a, b: a == b),
-                lambda eq: eq,
-            )
-        )
-        / p["num_hashes"]
-    )
     return (
         probe.join(corpus, ["band", "bkey"])
-        .withColumn("est_sim", est)
-        .filter(F.col("est_sim") >= min_est_sim)
-        .select("probe_id", "corpus_id", "est_sim")
+        .selectExpr("probe_id", "corpus_id", _est_sim(p["num_hashes"]))
+        .filter(f"est_sim >= {_sql_double(min_est_sim)}")
         .dropDuplicates(["probe_id", "corpus_id"])
     )
 

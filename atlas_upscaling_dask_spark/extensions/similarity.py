@@ -25,8 +25,12 @@ casting elements to double, so results match bitwise.
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .dedup import _ident
 
 
 def _as_double(arr: Column) -> Column:
@@ -110,51 +114,54 @@ def brute_force_topk_blas(
     import numpy as np
     import pandas as pd
 
-    q_rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
+    q_rows = queries.selectExpr(_ident(id_col), _ident(vec_col)).collect()
     if not q_rows:
         raise ValueError("empty query set")
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
     q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
+    k = operator.index(k)
 
     def local_topk(batches):
+        # rank by (cosine DESC, id ASC) — the global window's order — so
+        # exact ties at a partition's k-th place keep the smallest ids
         for pdf in batches:
             ids = pdf[id_col].to_numpy(dtype=np.int64)
+            take = min(k, len(ids))
+            if take < 1:
+                continue
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
             mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = mat @ q_mat.T  # |part| × |Q|
-            outs = []
-            for qi, qid in enumerate(q_ids):
-                col = sims[:, qi]
-                mask = ids != qid
-                cand_idx = np.nonzero(mask)[0]
-                take = min(k, len(cand_idx))
-                if not take:
-                    continue
-                best = cand_idx[np.argsort(-col[cand_idx], kind="stable")[:take]]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": ids[best],
-                            "cosine": col[best],
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            # |Q| × |part|: each query's scores are contiguous for the
+            # per-query k-th-largest partition
+            sims = q_mat @ mat.T
+            own = q_ids[:, None] == ids[None, :]
+            # self matches never qualify; NaN (zero vectors) ranks last
+            key = np.where(own | np.isnan(sims), -np.inf, sims)
+            kth = np.partition(key, len(ids) - take, axis=1)[:, len(ids) - take]
+            qs, rows = np.nonzero((key >= kth[:, None]) & ~own)
+            order = np.lexsort((ids[rows], -key[qs, rows], qs))
+            qs, rows = qs[order], rows[order]
+            # rank within each query; keep the first k
+            keep = np.arange(len(qs)) - np.searchsorted(qs, qs) < k
+            qs, rows = qs[keep], rows[keep]
+            yield pd.DataFrame(
+                {
+                    "query_id": q_ids[qs],
+                    "neighbor_id": ids[rows],
+                    "cosine": sims[qs, rows],
+                }
+            )
 
     partial = corpus.mapInPandas(
         local_topk, schema="query_id long, neighbor_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
+    return partial.selectExpr(
+        "query_id",
+        "neighbor_id",
+        "cosine",
+        "row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rk",
+    ).filter(f"rk <= {k}")
 
 
 def _bucket_expr(vec: Column, n_planes: int) -> Column:

@@ -18,6 +18,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """A quarter of the host's physical memory, capped at 32g.
+
+    The local-mode driver JVM hosts the executors too, and its heap
+    grows towards its cap: a fixed 32g outgrows a 16 GB host and gets
+    the JVM OOM-killed part-way through a workload.  A quarter leaves
+    the rest to off-heap buffers, the Python workers and the OS.
+    """
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # no sysconf on this OS
+        return "32g"
+    return f"{min(total // 4, 32 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "atlas_upscaling_dask_spark",
     master: str | None = None,
@@ -38,6 +53,8 @@ def get_spark(
 
     ``SPARK_GRAFT_CPUS`` (default 32) sets both the local master's core
     count and the default shuffle partitions; it is read on every call.
+    ``SPARK_GRAFT_DRIVER_MEM`` sets the driver heap (default: a quarter
+    of physical memory, capped at 32g).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -56,7 +73,10 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

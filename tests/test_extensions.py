@@ -321,6 +321,149 @@ def test_minhash_backends_agree_on_near_dups(docs):
         )
 
 
+_GOLDEN_BASE = "the quick brown fox jumps over the lazy dog by the river bank today"
+_GOLDEN_DOCS = [
+    (1, _GOLDEN_BASE),
+    (2, _GOLDEN_BASE.replace("lazy", "sleepy")),
+    (3, _GOLDEN_BASE),
+    (4, "a completely different sentence about spark plans and py4j calls"),
+    (5, _GOLDEN_BASE.replace("river", "sea").replace("today", "now")),
+    (6, "too short"),
+    (7, "a completely different sentence about spark plans and python calls"),
+]
+# xxhash64 backend, 16 hashes, 3-word shingles; doc 6 has no shingle
+_GOLDEN_SIGS = {
+    1: [276343607, 98348468, 12235251, 112163182, 100159654, 280794662, 336039474, 64637140,
+        188231205, 463240856, 273207064, 40723384, 16233404, 91865036, 168612190, 152524695],
+    2: [187541571, 98348468, 12235251, 59462302, 125938649, 280794662, 66202981, 64637140,
+        188231205, 463240856, 253948654, 40723384, 218546566, 91865036, 168612190, 2709717],
+    4: [5579818, 416498456, 266019038, 562552345, 115891254, 253340560, 214262937, 332120043,
+        213926536, 330707133, 162506836, 543592442, 30099931, 283003532, 110750735, 348781824],
+    5: [276343607, 157192875, 27191597, 112163182, 100159654, 341713361, 336039474, 64637140,
+        188231205, 120094218, 273207064, 40723384, 16233404, 91865036, 168612190, 152524695],
+    7: [5579818, 416498456, 266019038, 587993255, 115891254, 149663341, 214262937, 332120043,
+        213926536, 330707133, 162506836, 543592442, 30099931, 128593476, 110750735, 348781824],
+}
+_GOLDEN_SIGS[3] = _GOLDEN_SIGS[1]
+
+
+def test_minhash_golden_signatures_bands_pairs(spark):
+    # recorded from the Column-built operators; the SQL-text plans must
+    # reproduce signatures, band keys, pairs and est_sim exactly
+    from atlas_upscaling_dask_spark.extensions.dedup import (
+        _band_rows,
+        exact_dedup,
+        minhash_lsh_pairs,
+        minhash_signatures_wide,
+    )
+
+    docs = spark.createDataFrame(_GOLDEN_DOCS, "doc_id long, text string")
+    wide = minhash_signatures_wide(docs)
+    assert {r["doc_id"]: list(r["sig_arr"]) for r in wide.collect()} == _GOLDEN_SIGS
+    bands = {(r["doc_id"], r["band"]): r["bkey"] for r in _band_rows(wide, 16, 8).collect()}
+    assert bands == {
+        (d, b): ",".join(map(str, sig[2 * b : 2 * b + 2]))
+        for d, sig in _GOLDEN_SIGS.items()
+        for b in range(8)
+    }
+    pairs = sorted(tuple(r) for r in minhash_lsh_pairs(docs, min_est_sim=0.3).collect())
+    assert pairs == [
+        (1, 2, 0.5625), (1, 3, 1.0), (1, 5, 0.75), (2, 3, 0.5625), (3, 5, 0.75), (4, 7, 0.8125)
+    ]
+    survivors = exact_dedup(docs).selectExpr("keep_id AS doc_id", "text")
+    pairs = sorted(tuple(r) for r in minhash_lsh_pairs(survivors, min_est_sim=0.3).collect())
+    assert pairs == [(1, 2, 0.5625), (1, 5, 0.75), (4, 7, 0.8125)]
+
+
+def test_minhash_survivors_build_is_cheap(spark, sf_dir, monkeypatch):
+    # building the near-dup query over exact-dedup survivors must start
+    # no Spark job (spread_small_input decides from the plan) and stay
+    # a few hundred py4j round trips (SQL text, not Column calls)
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from atlas_upscaling_dask_spark.extensions.dedup import exact_dedup, minhash_lsh_pairs
+
+    docs = load_table(spark, sf_dir, "documents")
+    survivors = exact_dedup(docs).selectExpr("keep_id AS doc_id", "text")
+    sc = spark.sparkContext
+    calls = []
+    send = ClientServerConnection.send_command
+
+    building_thread = threading.get_ident()
+
+    def counting(self, command, *args, **kwargs):
+        # not the delete commands py4j's finalizer thread sends for
+        # freed JavaObjects
+        if threading.get_ident() == building_thread:
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    gc.collect()
+    sc.setJobGroup("minhash-build", "build only")
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    try:
+        pairs = minhash_lsh_pairs(survivors)
+    finally:
+        monkeypatch.undo()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("minhash-build") == []
+    assert 0 < len(calls) <= 300, f"{len(calls)} py4j round trips to build the query"
+    assert "REPARTITION_BY_NUM" in pairs._jdf.queryExecution().executedPlan().toString()
+
+
+def _spread_of(df):
+    """(partitions, key) of a top-level hash repartition, else None."""
+    node = df._jdf.queryExecution().logical()
+    if node.nodeName() != "RepartitionByExpression":
+        return None
+    return node.numPartitions(), node.partitionExpressions().head().toString()
+
+
+def test_spread_small_input_decisions(spark, tmp_path):
+    from atlas_upscaling_dask_spark.extensions.dedup import exact_dedup, spread_small_input
+
+    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    path = str(tmp_path / "one_split")
+    spark.range(200).selectExpr("id AS doc_id", "CAST(id % 100 AS STRING) AS text").coalesce(
+        1
+    ).write.parquet(path)
+    one = spark.read.parquet(path)
+    # no exchange: the scan's split count decides
+    assert _spread_of(spread_small_input(one, "doc_id")) == (target, "'doc_id")
+    wide = spark.range(0, 200, 1, target)
+    assert spread_small_input(wide, "doc_id") is wide
+    # exchange: decided from the size estimate, as AQE will coalesce
+    # (running the survivors here shows what AQE actually does)
+    aqe = "spark.sql.adaptive."
+    settings = [
+        {},
+        {aqe + "coalescePartitions.parallelismFirst": "false"},
+        {
+            aqe + "coalescePartitions.parallelismFirst": "false",
+            aqe + "coalescePartitions.minPartitionSize": "1b",
+            aqe + "advisoryPartitionSizeInBytes": "1b",
+        },
+        {aqe + "coalescePartitions.enabled": "false"},
+    ]
+    decided = []
+    for confs in settings:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        try:
+            survivors = exact_dedup(one).selectExpr("keep_id AS doc_id", "text")
+            spread = _spread_of(spread_small_input(survivors, "doc_id"))
+            coalesced = survivors.rdd.getNumPartitions()
+        finally:
+            for key in confs:
+                spark.conf.unset(key)
+        assert spread == ((target, "'doc_id") if coalesced < target else None), confs
+        decided.append(spread is not None)
+    assert decided == [True, True, False, False]
+
+
 def test_simhash_identical_docs_equal(spark):
     from atlas_upscaling_dask_spark.extensions.dedup import simhash
 
@@ -581,6 +724,31 @@ def test_blas_topk_matches_fold_topk(emb):
     for key in fold_m:
         assert fold_m[key]["neighbor_id"] == blas_m[key]["neighbor_id"], key
         assert abs(fold_m[key]["cosine"] - blas_m[key]["cosine"]) < 1e-9
+
+
+def test_blas_topk_ties_keep_smallest_ids(spark):
+    # duplicate embeddings split across partitions: every partition must
+    # rank ties by id, or the global window never sees the smallest ids
+    from atlas_upscaling_dask_spark.extensions.similarity import (
+        brute_force_topk,
+        brute_force_topk_blas,
+    )
+
+    e0, e1 = [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]
+    # partition 0 holds ids 5, 4, 0, 6; partition 1 holds 3, 1, 2, 7
+    rows = [(5, e0), (4, e0), (0, e0), (6, e1), (3, e0), (1, e0), (2, e0), (7, e1)]
+    corpus = spark.sparkContext.parallelize(rows, 2).toDF("vec_id long, embedding array<double>")
+    queries = spark.createDataFrame([(100, e0), (0, e0)], "vec_id long, embedding array<double>")
+    blas = sorted(tuple(r) for r in brute_force_topk_blas(queries, corpus, k=2).collect())
+    # query 0 is itself in the corpus and never its own neighbor
+    assert blas == [
+        (0, 1, 1.0, 1), (0, 2, 1.0, 2), (100, 0, 1.0, 1), (100, 1, 1.0, 2)
+    ]
+    assert blas == sorted(tuple(r) for r in brute_force_topk(queries, corpus, k=2).collect())
+    every = brute_force_topk_blas(queries, corpus, k=10).filter("query_id = 100").collect()
+    assert [r["neighbor_id"] for r in sorted(every, key=lambda r: r["rk"])] == [
+        0, 1, 2, 3, 4, 5, 6, 7
+    ]
 
 
 def test_asof_tolerance(spark):

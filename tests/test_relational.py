@@ -316,6 +316,8 @@ def test_lookup_coordinate_types(spark, edge_store):
 def test_decoded_lookup_py4j_budget(spark, edge_store, monkeypatch):
     # PySpark wraps every Column/functions call in several py4j round
     # trips; the SQL-text lookup must stay a few dozen per query
+    import threading
+
     from py4j.clientserver import ClientServerConnection
 
     from atlas_upscaling_dask_spark.operators.relational import point_lookup_chunks
@@ -325,8 +327,13 @@ def test_decoded_lookup_py4j_budget(spark, edge_store, monkeypatch):
     calls = []
     send = ClientServerConnection.send_command
 
+    building_thread = threading.get_ident()
+
     def counting(self, command, *args, **kwargs):
-        calls.append(command)
+        # py4j's finalizer thread sends a delete command for every freed
+        # JavaObject whenever it runs; those are not this build's
+        if threading.get_ident() == building_thread:
+            calls.append(command)
         return send(self, command, *args, **kwargs)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)

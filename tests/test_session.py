@@ -43,3 +43,22 @@ def test_cpus_env_read_per_call(monkeypatch):
     # an explicit shuffle_partitions still wins over the env default
     session.get_spark("t", shuffle_partitions=2)
     assert builder.conf["spark.sql.shuffle.partitions"] == "2"
+
+
+def test_driver_heap_sized_from_host(monkeypatch):
+    def host(gib):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * (1 << 30) // 4096}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+
+    builder = _Builder()
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=builder))
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    host(16)
+    session.get_spark("t")
+    assert builder.conf["spark.driver.memory"] == "4096m"
+    host(512)  # capped at 32g
+    session.get_spark("t")
+    assert builder.conf["spark.driver.memory"] == "32768m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")  # the variable still wins
+    session.get_spark("t")
+    assert builder.conf["spark.driver.memory"] == "3g"

@@ -79,8 +79,11 @@ def check(name: str, plan: str, rules: dict) -> list[str]:
                 f"found {found}"
             )
         # the spread exchange is exempt from the shuffle budget below;
-        # rewrite the plan so count_shuffles no longer sees it
-        plan = _SPREAD_EXCHANGE_RE.sub("(0) SpreadExempt", plan, count=allowed)
+        # rewrite the plan so count_shuffles no longer sees it.  Never
+        # exempt more than were found (re.sub's count=0 means "all").
+        exempt = min(allowed, found)
+        if exempt:
+            plan = _SPREAD_EXCHANGE_RE.sub("(0) SpreadExempt", plan, count=exempt)
     if rules.get("pushdown") and "PushedFilters: [" not in plan.replace(
         "PushedFilters: []", ""
     ):
@@ -135,6 +138,20 @@ def audited_queries():
         return li.filter(
             (F.col("l_orderkey") == 1) & (F.col("l_linenumber") == 1)
         ).select("l_orderkey", "l_quantity")
+
+    def minhash_survivors(spark, sf_dir):
+        # near-dup pairs over the exact-dedup survivors: the input is
+        # itself shuffled, so spread_small_input decides from the plan
+        from atlas_upscaling_dask_spark.extensions.dedup import (
+            exact_dedup,
+            minhash_lsh_pairs,
+        )
+        from atlas_upscaling_dask_spark.tables import load_table
+
+        docs = load_table(spark, sf_dir, "documents")
+        return minhash_lsh_pairs(
+            exact_dedup(docs).selectExpr("keep_id AS doc_id", "text")
+        )
 
     return {
         "point_lookup_pushdown": (point_lookup, {"pushdown": True, "pruned": True}),
@@ -202,6 +219,14 @@ def audited_queries():
                     "atlas_upscaling_dask_spark.tables", fromlist=["load_table"]
                 ).load_table(spark, sf_dir, "documents"),
             ),
+            {"max_shuffles": 4, "no_python_udf": True, "no_single_partition": True},
+        ),
+        # the same over exact-dedup survivors: per self-join side one
+        # exact-dedup exchange + one spread repartition (the band join
+        # broadcasts at audit scale, and the pair dedup reuses the d1
+        # partitioning) — 4, and building from SQL text must add none
+        "dedup_minhash_survivors": (
+            minhash_survivors,
             {"max_shuffles": 4, "no_python_udf": True, "no_single_partition": True},
         ),
         # 2-D skyline: the running min over the distinct-price frame is
